@@ -34,10 +34,10 @@ in ``unstable_queries`` -- a reader of BENCH_r{N}.json alone can tell
 wobble from regression for that query family without the crossover
 prose.
 
-THE RESIDUAL SPREAD SOURCE, identified r11 (tools/ab_variance.py;
-fully-gated window, every timed rep stamped with per-collector GC
-deltas, janino compile counts, JIT total-compile-time deltas, and the
-JVM's /proc io read_bytes): **asynchronous tiered-JIT
+THE RESIDUAL SPREAD SOURCE, identified r11 (fully-gated window,
+every timed rep stamped with per-collector GC deltas, janino compile
+counts, JIT total-compile-time deltas, and the JVM's /proc io
+read_bytes): **asynchronous tiered-JIT
 re-optimization**, not GC, not codegen-cache eviction, not page-cache
 eviction.  Across 108 instrumented reps of the two r10 spread-tagged
 queries plus a control at sf0.1: janino compiles 0 (the 2000-entry

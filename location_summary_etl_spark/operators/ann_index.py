@@ -456,7 +456,7 @@ def ivf_query_index_vectors(spark: SparkSession, root: str,
     ``ivf_query_index`` exactly, or an id outside the corpus (e.g.
     negative) to rank every member.
 
-    Measured trade (tools/ab_ann_vector_path.py, sf1 = 500k vectors,
+    Measured trade (r8, sf1 = 500k vectors,
     quiet window, min-of-5): this path reads FEWER inverted-file
     files (5 vs 6 -- the tier only has 6) but times 0.57 vs 0.39 s,
     because probe selection is one extra blocking driver job (~0.18 s
@@ -565,7 +565,7 @@ def ivf_query_index_quantized(spark: SparkSession, root: str,
     interpreted, the measured 3x tax) for callers that must not
     launch Python workers.
 
-    MEASURED (tools/ab_ann_quantized.py + the backend A/B, sf10 tier
+    MEASURED (r9, the serving and backend A/Bs, sf10 tier
     = 200k vectors, probe-bracketed quiet windows, 2026-08-15):
     candidate scan 8.2 MB vs the float path's 56.9 MB on disk (6.9x
     fewer bytes -- the float inverted file stores array<double>, so
@@ -595,7 +595,7 @@ def ivf_query_index_quantized(spark: SparkSession, root: str,
     (unit-pinned); at finite R, agreement is monotone in R and the
     right R tracks how tightly the corpus packs top cosines relative
     to the ~1e-3 quantization error -- measured at the sf10 tier
-    (tools/ab_ann_refine.py, 2026-08-15, end-to-end per call): R=4k
+    (r10, 2026-08-15, end-to-end per call): R=4k
     stayed at the bare path's 0.80 agreement, R=10k measured 1.00
     with row-for-row float-identical output at 2.60 s vs float's
     2.74 s and bare int8's 1.45 s -- at bench scale the refine

@@ -53,7 +53,7 @@ def asof_join_backward(probe: DataFrame, base: DataFrame,
     # subset-key hash partitioning satisfies the window's clustered
     # distribution, so no second exchange appears.  File-gated: no-op
     # whenever the union's source scans are already core-wide
-    # (tools/ab_r12_eventswiden.py: 0.291 -> 0.278 s at sf0.1).
+    # (OPTIMIZATION_r12.md change #5: 0.291 -> 0.278 s at sf0.1).
     # keys[0] is a per-entity id (user_id here): not unique, but the
     # window below partitions by the same key, so the widening exchange
     # carries exactly the skew the window itself would -- no new skew

@@ -180,7 +180,7 @@ def exact_dedup(df: DataFrame, content_cols: list[str],
 
 SHINGLE_NGRAM = 3  # word n-gram size for MinHash/SimHash features
 
-# r13 (guide §2.2/§2.6, tools/ab_r13_minhash.py): width bound for the
+# r13 (guide §2.2/§2.6, OPTIMIZATION_r13.md change #1): width bound for the
 # signature pipelines' widening repartition -- one task per ~64 KB of
 # source text, cores-capped.  The 3-gram shingle+md5+minhash stage
 # measures ~1.5 us/byte of real work, so a 64 KB task carries ~100 ms
@@ -206,7 +206,7 @@ SIGNATURE_TASK_TARGET_BYTES = 64 * 1024
 # HashPartitioning(g) satisfies the aggregate's distribution so the
 # exchange count is unchanged) runs the expansion data-proportionally
 # wide.  None disables the pin (the r12 shape).  Value decided by
-# tools/ab_r13_ngram_pairstage.py: 64 KB (width 10 at sf0.1) measured
+# OPTIMIZATION_r13.md change #2: 64 KB (width 10 at sf0.1) measured
 # capped 0.863 -> 0.621 s / uncapped 0.674 -> 0.608 s, beating head in
 # every interleaved round; 32 KB within noise of 64 KB; 16 KB (full 32
 # fan-out) worse -- the same tiny-task fixed-cost curve the signature
@@ -215,17 +215,6 @@ SIGNATURE_TASK_TARGET_BYTES = 64 * 1024
 # memory); at any tier with core-wide scans the gate disables the pin
 # and the two-phase shape stands.
 NGRAM_BUCKET_TASK_TARGET_BYTES: int | None = 64 * 1024
-
-# Share one bucket-aggregate materialization between the pair branch
-# and the filter-cap drops branch (see the persist site in
-# ngram_jaccard_pairs).  A/B'd r13 and REJECTED (stays False): the
-# duplicated drops-side collect_list is ~1 s of CPU but only ~100 ms
-# of 10-wide wall, and the cache materialization + InMemoryTableScan
-# overhead gives it straight back (nopersist 0.781/0.790/0.912 s vs
-# persist 0.811/0.827/0.898 across three interleaved rounds at
-# sf0.1).  Kept as a flag because the trade flips if a tier ever
-# makes the bucket aggregate wall-dominant.
-NGRAM_PERSIST_BUCKETS = False
 
 
 def _tokenized(docs: DataFrame, id_col: str, text_col: str,
@@ -743,7 +732,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     # CollapseProject leaves it alone, and the generator input is
     # still the non-attribute arrays_zip, keeping the
     # InferFiltersFromGenerate exemption.  Measured 1.036 -> 1.000 s
-    # uncapped at sf0.1 (tools/ab_r12_ngram_proj.py, parity-anchored
+    # uncapped at sf0.1 (OPTIMIZATION_r12.md change #2, parity-anchored
     # to the operator itself); the same fix measured -15% on
     # doc_fingerprints, whose per-doc shingle array is ~4x wider.
     dgrams = F.array_distinct(ngrams_from_tokens(F.col("_toks"), n))
@@ -902,16 +891,6 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
 
     passes = _resolve_scratch_passes(postings, scratch_passes, max_df)
     if passes <= 1:
-        if filter_cap and NGRAM_PERSIST_BUCKETS:
-            # r13: under the width-pinned single-phase bucket aggregate
-            # the drops branch re-runs the whole collect_list above the
-            # reused raw-posting exchange (plan-level duplication;
-            # ReuseExchange shares only the exchange).  Caching the
-            # bucket relation makes the two branches share one
-            # materialization.  CacheManager substitutes by
-            # canonicalized plan, so the buckets/drops frames derived
-            # above hit the cache even though persist is called after.
-            groups.persist(StorageLevel.MEMORY_AND_DISK)
         return _finish(_pair_counts())
     # SCRATCH-STRIPED pair counting (module-level scratch note): each
     # stripe shuffles ~est/passes of the pair occurrences and emits
@@ -1065,7 +1044,7 @@ def ngram_jaccard_pairs_prefix(docs: DataFrame, id_col: str = "doc_id",
 # sum-of-per-doc-distinct-grams over the sample = 1 / (mean posting
 # length): ~1.0 means grams are near-unique to one doc.
 #
-# MEASURED (tools/ab_ngram_auto.py + the t=0.8 follow-up, 5,000-doc
+# MEASURED (r8, with the t=0.8 follow-up, 5,000-doc
 # corpora, interleaved min-of-3, probe-bracketed quiet windows): the
 # capped aggregate form dominates MOST of the space -- synthetic
 # shared-vocab corpus (ratio 0.63): aggregate 1.73 s vs prefix 4.08 s

@@ -86,7 +86,7 @@ def minmax_score_window(df: DataFrame, col: str, out_col: str) -> DataFrame:
 # the lineage's SOURCE bytes staying under a quarter of the broadcast
 # cap (32 MB session cap -> 8 MB, ~100-200k parquet rows -- the same
 # order as guarded_unpartitioned's 100k-row in-plan tripwire that
-# backs this estimate at runtime).  Measured (tools/ab_minmax_auto.py,
+# backs this estimate at runtime).  Measured (r8,
 # quiet windows, min-of-3): the window form WINS at every legal size
 # -- 0.14 vs 0.20 s at 7 KB, 0.17 vs 0.19 s at 260 KB source, both
 # forms floor-bound -- so unlike the flagship's crossover this gate

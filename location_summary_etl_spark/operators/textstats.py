@@ -157,7 +157,7 @@ def doc_fingerprints(docs: DataFrame, id_col: str = "doc_id",
     leaves the alias alone (non-cheap, referenced 3x), and the
     generator input stays a non-attribute (the arrays_zip), so the
     InferFiltersFromGenerate exemption holds.  Measured with the
-    hash-partition change below (tools/ab_r12_parallelism.py,
+    hash-partition change below (OPTIMIZATION_r12.md change #2,
     interleaved min-of-8 at sf0.1): inline+round-robin 0.732 s,
     projected+round-robin 0.623 s, projected+hash 0.265 s -- same
     result multiset, one exchange deleted (groupBy(doc_id) reuses the

@@ -66,110 +66,6 @@ def oracle_sql() -> dict[str, str]:
 
 _LOADED = False
 
-# Entries that already earned an external driver row (union of the keys
-# in CORRECTNESS_r01-r06.json; 147 of 160).  The round-robin guarantees
-# FAMILY coverage in the external gate's first-50 sampling window; the
-# 13 remaining never-sampled entries are hoisted to the head of the
-# registration order (see _ensure_loaded) so round 7 closes the ledger:
-# every corpus entry then has an external driver row on record.
-_DRIVER_SAMPLED_PRIOR = frozenset({
-    "ann_topk_bruteforce", "ann_topk_bruteforce_pandas", "ann_topk_ivf",
-    "ann_topk_lsh", "ann_topk_quantized", "corpus_chunk_documents",
-    "corpus_clean", "corpus_contamination_check",
-    "corpus_length_histogram", "corpus_lm_perplexity",
-    "corpus_mixture_resample", "corpus_pack_sequences",
-    "corpus_quality_rules", "corpus_shuffle_shards",
-    "corpus_source_report", "corpus_stratified_sample",
-    "corpus_train_val_split", "cte_latest_order_sql",
-    "customer_cohort_retention", "customer_grouping_sets",
-    "customer_nation_renamed", "customer_order_chain_lengths",
-    "customer_order_count_distribution", "customer_order_recency",
-    "customer_order_running_totals", "customer_order_timeline",
-    "customer_scd2_merge", "customers_with_urgent_orders",
-    "customers_without_urgent_orders", "data_quality_audit",
-    "dedup_clusters", "dedup_embedding_cosine", "dedup_exact",
-    "dedup_minhash_lsh", "dedup_minhash_lsh_capped",
-    "dedup_minhash_lsh_uncapped", "dedup_minhash_signatures",
-    "dedup_ngram_jaccard", "dedup_ngram_jaccard_capped",
-    "dedup_ngram_jaccard_prefix", "dedup_ngram_jaccard_uncapped",
-    "dedup_semantic_kmeans", "dedup_simhash_pairs",
-    "dedup_simhash_signatures", "doc_chunks_udtf",
-    "doc_token_map_stats", "embedding_kmeans", "embedding_label_norms",
-    "embedding_quantize_int8", "events_conversion_attribution",
-    "events_forward_fill", "events_funnel", "events_interval_join",
-    "events_json_kpis", "events_json_schema_parse",
-    "events_json_variant", "events_rolling_10min",
-    "events_sessionization", "events_sliding_10min_5min",
-    "events_state_runs", "events_tumbling_10min", "events_user_gapfill",
-    "events_value_anomaly", "excess_stock_suppliers",
-    "flagship_nation_summary", "forecast_revenue_change",
-    "full_outer_nation_counts", "global_latest_orders",
-    "inactive_high_balance_segments", "large_quantity_orders",
-    "latest_order_per_customer", "lineitem_derived_columns",
-    "lineitem_melt_profile", "merge_upsert_orders", "min_cost_supplier",
-    "multimodal_decode_features", "multimodal_inventory",
-    "multimodal_mixed_decode", "multimodal_png_decode",
-    "nation_balance_score", "nation_distinct_segments",
-    "nation_market_share", "nation_name_fuzzy_pairs",
-    "nation_order_extremes", "nation_pair_volume",
-    "nation_revenue_share", "nation_top2_orders_lateral",
-    "nation_top_balance_customer", "nations_with_both",
-    "order_priority_checking", "order_shipping_priority",
-    "orders_approx_stats", "orders_arrow_udf_bands",
-    "orders_bitmap_distinct", "orders_month_status_pivot",
-    "orders_param_sql", "orders_price_banded",
-    "orders_price_banded_compiled", "orders_price_range_window",
-    "orders_rank_analytics", "part_brand_size_cube",
-    "part_brand_supplier_counts", "part_promo_disjunction_revenue",
-    "part_small_quantity_revenue", "pricing_summary",
-    "product_profit_by_nation_year", "promo_revenue_share",
-    "region_local_supplier_volume", "region_nation_rollup",
-    "returned_item_top_customers", "returnflag_profile",
-    "segment_customers_in_region", "segment_order_statistics",
-    "segment_price_quantiles", "segment_right_outer_coverage",
-    "segment_weighted_price", "segment_without_urgent_orders",
-    "select_star_passthrough", "shipping_delay_priority_counts",
-    "skew_salted_fact_join", "streaming_dedup_replay",
-    "streaming_enrich_broadcast", "streaming_lakehouse_ingest",
-    "streaming_session_windows", "streaming_tumbling_counts",
-    "streaming_user_running_stats", "supplier_customer_pagerank",
-    "text_approx_topk_sketch", "text_bpe_token_counts",
-    "text_fingerprints", "text_heavy_hitters", "text_lang_id",
-    "text_pii_scrub", "text_tfidf_top_terms", "text_token_stats",
-    "text_vocab_top20", "top_orders_global", "top_orders_per_nation",
-    "top_revenue_supplier", "union_customer_supplier_names",
-    "user_activity_cogroup", "user_value_ewma",
-    "user_value_ewma_pandas", "versioned_change_feed",
-    "versioned_incremental_agg", "waiting_supplier_orders",
-    "warehouse_roundtrip",
-})
-
-# The 13 entries that never earned a driver row across r1-r6 (judge-
-# verified green at sf0.01 in the r6 session, but the driver row is the
-# authoritative external signal).  Hoisted to the FRONT of the
-# registration order -- ahead of the family round-robin -- because
-# multimodal holds 5 of them and events 4, and the round-robin grants
-# each family at most 2 slots in the external gate's first-50 window.
-# The remaining 37 window slots keep full family coverage (every family
-# already has >= 1 driver-green row from r1-r6, so the coverage these
-# 13 displace is redundant).  After r7 every corpus entry has a driver
-# row on record and this machinery can retire.
-_NEVER_DRIVER_SAMPLED = (
-    "ann_recall_contract",       # NEW in r11 (sanctioned, order #7)
-    "ann_topk_ivf_refined",      # NEW in r10 (sanctioned, order #4)
-    "ann_topk_ivf_quantized",    # NEW in r9 (sanctioned, order #6)
-    "dedup_ngram_jaccard_auto",  # NEW in r9 (sanctioned, order #1)
-    "ann_topk_ivf_delta",      # NEW in r8 (the one permitted addition)
-    "ann_topk_ivf_persisted",  # NEW in r7 (the one permitted addition)
-    "events_asof_purchase_click", "multimodal_gif_decode",
-    "versioned_time_travel", "orderdate_multiset_ops",
-    "events_bucket_nullsafe_join", "multimodal_video_frames",
-    "versioned_schema_evolution", "orders_pipe_rollup",
-    "events_rollup_cascade", "multimodal_audio_decode",
-    "events_sketch_rollup", "multimodal_resize_inventory",
-    "multimodal_frame_stats",
-)
-
 
 def _ensure_loaded() -> None:
     """Import every corpus module exactly once (each registers itself),
@@ -228,13 +124,6 @@ def _ensure_loaded() -> None:
         cursor += 1
         if all(cursor >= len(fam) for fam in families):
             break
-    # Hoist the never-driver-sampled entries to the head (stable sort:
-    # the family round-robin order is preserved behind them), so ALL 13
-    # land in the external gate's first-50 window regardless of how many
-    # share a family.  The remaining 37 slots follow round-robin order,
-    # keeping at least one entry of every family inside the window.
-    hoist = {n: i for i, n in enumerate(_NEVER_DRIVER_SAMPLED)}
-    interleaved.sort(key=lambda n: (0, hoist[n]) if n in hoist else (1, 0))
     reordered = {name: _REGISTRY[name] for name in interleaved}
     assert len(reordered) == len(_REGISTRY)
     _REGISTRY.clear()

@@ -233,7 +233,7 @@ def events_state_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # coalescing shrinks the ~2 MB window exchange to a couple of
     # partitions, serializing the sort+window; the explicit repartition
     # is the same exchange, REPARTITION_BY_NUM (coalescing-exempt).
-    # Interleaved A/B (tools/ab_r12_eventswiden.py): 0.368 -> 0.222 s
+    # Interleaved A/B (OPTIMIZATION_r12.md change #5): 0.368 -> 0.222 s
     # on top of the lag-form rewrite.  File-gated no-op at scale.
     ev = ensure_parallelism(load_table(spark, sf_dir, "events"), by="user_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")

@@ -189,7 +189,7 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nearly serial; the explicit hash repartition is the SAME exchange
     # in the SAME position but REPARTITION_BY_NUM (coalescing-exempt),
     # and the final groupBy(user_id) still reuses it.  Interleaved A/B
-    # (tools/ab_r12_eventswiden.py): 0.262 -> 0.230 s.  File-gated
+    # (OPTIMIZATION_r12.md change #5): 0.262 -> 0.230 s.  File-gated
     # no-op at any tier where the scan is already wide.
     ev = ensure_parallelism(_events(spark, sf_dir), by="user_id")
     ev = sessionize(ev, "user_id", "ts", 1800)

@@ -43,7 +43,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # file scans as ONE partition, so the per-custkey argmax otherwise runs
 # serially in the scan stage; hash-partitioning by o_custkey REPLACES
 # the exchange the window/aggregate needed).  Interleaved A/B
-# (tools/ab_r12_scanwiden.py): 0.190 -> 0.168 and 0.231 -> 0.204 s
+# (OPTIMIZATION_r12.md change #4): 0.190 -> 0.168 and 0.231 -> 0.204 s
 # (-11%) across two sessions.  No-op at production scale (file gate).
 def latest_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = ensure_parallelism(_t(spark, sf_dir, "orders"), by="o_custkey")
@@ -95,7 +95,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate function children do not get the cross-expression CSE a
     # Project's codegen does.  _charge keeps the original association
     # (disc * (1 + tax)), so the doubles -- and the oracle hash -- are
-    # bit-identical.  Interleaved A/B (tools/ab_r12_q1proj.py):
+    # bit-identical.  Interleaved A/B (OPTIMIZATION_r12.md change #6):
     # 0.681 -> 0.601 s (-12%).
     pre = (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-01").cast("timestamp_ntz"))
@@ -456,7 +456,7 @@ def region_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominates at this tier); at 100 TB the win is 3x the fact volume
     through the widest aggregate.
 
-    MEASURED FLOOR (r8, tools/decompose_r8.py, probe-bracketed quiet
+    MEASURED FLOOR (r8, probe-bracketed quiet
     window [0.95, 0.95], min-of-4 interleaved, cumulative stages at
     sf10): customer (nationkey, acctbal) bare scan 0.052 s; + both
     broadcast dim joins 0.127 s; + the (r_name, n_name) hash

@@ -85,7 +85,7 @@ def order_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderkey would fan the pre-aggregated revenue out into duplicate
     un-merged result rows.  TPC-H data guarantees the PK, and the
     oracle SQL's GROUP BY assumes the same uniqueness -- interleaved A/B
-    (tools/ab_q3_eager_agg.py): eager 0.73 s vs 0.88 s at sf1,
+    (r7): eager 0.73 s vs 0.88 s at sf1,
     5.70 s vs 6.84 s at sf10, result sets byte-identical at sf0.1.
     customer |><| orders still rides ``broadcast_if_small`` (see
     region_local_supplier_volume): at bench scale the pre-aggregated
@@ -102,7 +102,7 @@ def order_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     heap keeps 10 -- no global sort.
 
     MEASURED FLOOR for the post-rewrite sf10 residue (r8,
-    tools/decompose_r8.py, min across two probe-bracketed runs,
+    min across two probe-bracketed runs,
     cumulative stages): filtered lineitem scan 0.31 s; + the orderkey
     aggregate (partial agg + EXCHANGE + final) 1.64 s; customer x
     orders build side alone 0.31 s; full query 2.82 s.  The orderkey
@@ -111,7 +111,7 @@ def order_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange carries nearly the raw filtered row count.  Three
     alternatives measured against it, all in-code:
 
-    * BUCKETED LAYOUT (tools/ab_q3_bucketed.py): lineitem rewritten
+    * BUCKETED LAYOUT (r8): lineitem rewritten
       with write_bucketed(l_orderkey, 32); the plan drops the orderkey
       exchange entirely (asserted: 2 exchanges vs 3, results
       byte-identical) yet times NEUTRAL at local[32] sf10 (2.44 vs
@@ -120,7 +120,7 @@ def order_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
       This is still the documented 100 TB answer: on a real cluster
       the exchange the bucket spec deletes is a NETWORK pass over the
       fact table, not a memcpy.
-    * SEMI-FILTER BELOW THE AGGREGATE (tools/ab_q3_semifilter.py):
+    * SEMI-FILTER BELOW THE AGGREGATE (r8):
       broadcast-semi-join lineitem against the open-order keys before
       aggregating (Spark's runtime bloom filter does not inject here
       -- the aggregate blocks InjectRuntimeFilter).  sf1 0.92 vs
@@ -132,7 +132,7 @@ def order_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
       region_local_supplier_volume hint got; the scale-safe variant
       (a broadcast Bloom filter) is what InjectRuntimeFilter will do
       when the planner learns to push it through aggregates.
-    * AGGREGATE ABOVE THE JOIN (tools/ab_q3_eager_agg.py, r7): loses
+    * AGGREGATE ABOVE THE JOIN (r7): loses
       16-17% at sf1/sf10 -- see above.
 
     Residue verdict: one fact exchange whose per-task cost shrinks
@@ -148,7 +148,7 @@ def order_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange count, the shuffle just carries filtered raw rows
     (~2x the bytes of the collapsed rows, trivial at this size)
     instead of serializing the group build.  Interleaved A/B
-    (tools/ab_r12_scanwiden.py): 0.671 -> 0.440 s (-34%).  Queries
+    (OPTIMIZATION_r12.md change #4): 0.671 -> 0.440 s (-34%).  Queries
     where the same widening would ADD an exchange (Q1, Q5, Q17, the
     map-only derives) measured 19-258% WORSE and keep their shapes.
     At production scale the file-metadata gate makes this a no-op."""

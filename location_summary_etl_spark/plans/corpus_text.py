@@ -151,7 +151,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         # reuses the partitioning -- ClusteredDistribution is satisfied
         # by any subset of the keys -- so the tf aggregate's exchange
         # disappears (measured 0.978 -> 0.577 s at sf0.1, interleaved;
-        # tools/ab_r12_parallelism.py).  r13: width bounded at 64 KB of
+        # OPTIMIZATION_r12.md change #1).  r13: width bounded at 64 KB of
         # source per task (the signature-pipeline tiny-task curve,
         # operators/dedup.SIGNATURE_TASK_TARGET_BYTES note): full-width
         # 0.451-0.487 s vs bounded 0.324-0.354 s across settled

@@ -42,6 +42,23 @@ def _parse_bytes(raw: str, default: int) -> int:
         return default
 
 
+def _input_file_sizes(df) -> list[int] | None:
+    """Byte size of each input file across ``df``'s lineage (driver-side
+    file metadata, no Spark job).  ``None`` when the relation lists no
+    input files (non-file source) or a file cannot be stat'ed."""
+    try:
+        files = df.inputFiles()
+    except Exception:
+        return None
+    sizes = []
+    for f in files:
+        try:
+            sizes.append(os.path.getsize(f.removeprefix("file:")))
+        except OSError:
+            return None
+    return sizes or None
+
+
 def ensure_parallelism(df, min_partitions: int | None = None,
                        by: str | None = None,
                        target_task_bytes: int | None = None):
@@ -53,7 +70,7 @@ def ensure_parallelism(df, min_partitions: int | None = None,
     DATA-PROPORTIONAL size -- ``ceil(source_bytes / target)``, still
     cores-capped -- instead of the unconditional core-width fan-out.
     Motivation (guide §2.2/§2.6 tiny-task overhead, measured
-    tools/ab_r13_minhash.py): dedup_minhash_lsh at sf0.1 widens 594 KB
+    OPTIMIZATION_r13.md change #1): dedup_minhash_lsh at sf0.1 widens 594 KB
     of documents to 32 tasks of ~18 KB, and the stage's total
     executorRunTime measures 6838 ms at width 32 vs 910 ms at width 8
     for identical work -- per-task fixed cost (aggregate-buffer
@@ -72,7 +89,7 @@ def ensure_parallelism(df, min_partitions: int | None = None,
     so the driver's scaling comparison sees matched plans).
 
     ``by`` (r12): hash-partition on a UNIQUE id column instead of
-    round-robin.  Two measured effects (tools/ab_r12_parallelism.py,
+    round-robin.  Two measured effects (OPTIMIZATION_r12.md change #1,
     interleaved same-session min-of-8 at sf0.1):
 
     - every keyless ``repartition(n)`` first pays a LOCAL SORT of its
@@ -127,15 +144,10 @@ def ensure_parallelism(df, min_partitions: int | None = None,
     created with session-default parallelism, so no repartition is
     needed.
     """
-    import os as _os
-
     spark = df.sparkSession
     n = min_partitions or spark.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    if not files:
+    sizes = _input_file_sizes(df)
+    if sizes is None:
         return df
     max_pb = _parse_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"),
@@ -143,16 +155,8 @@ def ensure_parallelism(df, min_partitions: int | None = None,
     open_cost = _parse_bytes(
         spark.conf.get("spark.sql.files.openCostInBytes", "4194304"),
         4 * 1024 * 1024)
-    padded = 0
-    raw = 0
-    for f in files:
-        p = f.removeprefix("file:")
-        try:
-            sz = _os.path.getsize(p)
-        except OSError:
-            return df
-        raw += sz
-        padded += max(sz, open_cost)
+    raw = sum(sizes)
+    padded = sum(max(sz, open_cost) for sz in sizes)
     core = spark.sparkContext.defaultParallelism
     max_split = min(max_pb, max(open_cost, padded // max(core, 1)))
     est = (padded + max_split - 1) // max(max_split, 1)
@@ -191,23 +195,12 @@ def partition_for_python_scan(df, target_bytes: int = 4 * 1024 * 1024):
     ensure_parallelism picks.  Falls back to leaving the relation
     untouched when no file metadata is available.
     """
-    import os as _os
-
     n_cores = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    if not files:
+    sizes = _input_file_sizes(df)
+    if sizes is None:
         return df
-    total = 0
-    for f in files:
-        try:
-            total += _os.path.getsize(f.removeprefix("file:"))
-        except OSError:
-            return df
-    want = int(min(n_cores, max(1, total // target_bytes)))
-    if len(files) >= want:
+    want = int(min(n_cores, max(1, sum(sizes) // target_bytes)))
+    if len(sizes) >= want:
         return df if want > 1 else df.coalesce(1)
     return df.repartition(want)
 
@@ -291,21 +284,8 @@ def source_bytes(df) -> int | None:
     size is unknowable (non-file source, unlistable path): callers must
     treat None conservatively (no broadcast, the shuffle plan stands).
     Same proxy caveats as :func:`broadcast_if_small`."""
-    import os as _os
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    total = 0
-    for f in files:
-        try:
-            total += _os.path.getsize(f.removeprefix("file:"))
-        except OSError:
-            return None
-    return total
+    sizes = _input_file_sizes(df)
+    return None if sizes is None else sum(sizes)
 
 
 def filter_behind_barrier(df, cond):

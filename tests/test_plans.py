@@ -538,7 +538,7 @@ def test_q3_revenue_aggregates_below_the_join(spark, sf_dir):
     orderkey exchange then carries one row per open order instead of
     ~4 lineitems.  In the optimized logical plan the Join must be the
     Aggregate's parent -- printed first -- not the other way around.
-    Interleaved A/B (tools/ab_q3_eager_agg.py): 0.73 s vs 0.88 s at
+    Interleaved A/B (r7): 0.73 s vs 0.88 s at
     sf1, 5.70 s vs 6.84 s at sf10, identical result sets."""
     extended = plan_of(spark, "order_shipping_priority", sf_dir,
                        mode="extended")
@@ -699,7 +699,7 @@ def test_minhash_widening_is_data_proportional(spark):
     """The signature pipeline's widening exchange is sized by source
     bytes (SIGNATURE_TASK_TARGET_BYTES), not pinned to core width:
     32 tasks of ~18 KB measured 7.5x the executorRunTime of 8 tasks of
-    ~74 KB on identical work (tools/ab_r13_minhash.py) and inverted
+    ~74 KB on identical work (OPTIMIZATION_r13.md change #1) and inverted
     the driver's c8/c32 scaling.  Bytes-derived width keeps the plan
     matched across core counts."""
     from location_summary_etl_spark.operators.dedup import (
@@ -709,7 +709,7 @@ def test_minhash_widening_is_data_proportional(spark):
     want = _expected_bounded_width(
         spark, f"{SF_BENCH}/documents.parquet", SIGNATURE_TASK_TARGET_BYTES)
     plan = plan_of(spark, "dedup_minhash_lsh", SF_BENCH)
-    assert f"hashpartitioning(doc_id#" in plan
+    assert "hashpartitioning(doc_id#" in plan
     reps = [l for l in plan.splitlines()
             if "REPARTITION_BY_NUM" in l and "hashpartitioning(doc_id" in l]
     assert reps, "widening repartition missing from the minhash plan"
@@ -721,7 +721,7 @@ def test_ngram_pair_stage_exchange_is_pinned(spark):
     """The gram-bucket exchange is REPARTITION_BY_NUM (coalescing-
     exempt) at data-proportional width: AQE's byte-sized coalescing ran
     the quadratic pair expansion on 4 of 32 cores
-    (tools/ab_r13_ngram_pairstage.py, 0.863 -> 0.621 s).  The pin
+    (OPTIMIZATION_r13.md change #2, 0.863 -> 0.621 s).  The pin
     replaces the aggregate's ENSURE_REQUIREMENTS exchange, so the
     exchange count must not grow."""
     from location_summary_etl_spark.operators.dedup import (

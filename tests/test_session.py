@@ -14,6 +14,7 @@ from location_summary_etl_spark.session import (
     broadcast_if_small,
     ensure_parallelism,
     partition_for_python_scan,
+    source_bytes,
 )
 from location_summary_etl_spark.sources.registry import load_table
 
@@ -75,6 +76,18 @@ def test_partition_for_python_scan_caps_at_cores(spark, sf_dir):
 def test_partition_for_python_scan_leaves_non_file_alone(spark):
     df = spark.range(10).select(F.col("id"))
     assert partition_for_python_scan(df) is df
+
+
+def test_size_helpers_fall_through_on_unlistable_files(spark, tmp_path):
+    path = str(tmp_path / "gone")
+    spark.range(100).write.parquet(path)
+    df = spark.read.parquet(path)
+    # the relation keeps its file listing; the files themselves vanish
+    for f in (tmp_path / "gone").iterdir():
+        f.unlink()
+    assert ensure_parallelism(df) is df
+    assert partition_for_python_scan(df) is df
+    assert source_bytes(df) is None
 
 
 def test_demote_guarded_window_warnings_scopes_to_windowexec(spark):

@@ -24,9 +24,8 @@ text_fingerprints 0.545 vs 0.747) while CPU-bound queries agreed --
 some co-tenant contention classes (IO / page-cache / bandwidth
 sub-regimes) pass the gate.  So: the gate makes single artifacts
 honestly labelled, but cross-window deltas are still only suggestive;
-the authoritative comparison remains the interleaved same-session A/B
-(tools/ab_*.py pattern), and bench.py's min-across-passes defends
-against within-run flips.
+the authoritative comparison remains the interleaved same-session A/B,
+and bench.py's min-across-passes defends against within-run flips.
 
 Second probe class (r9, addressing that LIMIT): :func:`probe_mt` runs
 the streaming kernel on MT_THREADS threads at once (numpy releases the
