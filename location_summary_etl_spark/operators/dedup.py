@@ -960,10 +960,10 @@ def ngram_jaccard_pairs_prefix(docs: DataFrame, id_col: str = "doc_id",
     :func:`ngram_jaccard_pairs`, which amortizes verification across
     pair occurrences inside one partial-aggregated shuffle (1.2s vs
     4.4s end-to-end).  Both stay in the corpus: selectivity, not
-    asymptotics, picks the winner, and the crossover flips on
-    real-text gram distributions -- as of r8
-    :func:`ngram_jaccard_pairs_auto` makes that pick from the bounded
-    gram-reuse probe.
+    asymptotics, picks the winner.  The r8 grid (OPTIMIZATION_r14.md,
+    "Dual-form selectors retired") found one prefix win, -10 % at
+    t=0.8 on a near-unique gram universe; the aggregate form won every
+    other cell.
 
     SKEW POSTURE: this formulation carries NO df cap -- a ubiquitous
     gram that lands in many documents' prefixes still builds one
@@ -1034,139 +1034,6 @@ def ngram_jaccard_pairs_prefix(docs: DataFrame, id_col: str = "doc_id",
     return verified.select(
         "id_a", "id_b", round_portable(jac, 4).alias("jaccard")
     ).filter(F.col("jaccard") >= threshold)
-
-
-# Auto-gate constants (r8).  The aggregate/prefix crossover is a
-# SELECTIVITY property (gram-reuse density x Jaccard threshold), not a
-# byte count, so the gate's "stat" is a constant-size sampled probe --
-# one O(sample) job at any corpus scale -- rather than file metadata.
-# The probe ratio is corpus-distinct-grams /
-# sum-of-per-doc-distinct-grams over the sample = 1 / (mean posting
-# length): ~1.0 means grams are near-unique to one doc.
-#
-# MEASURED (r8, with the t=0.8 follow-up, 5,000-doc
-# corpora, interleaved min-of-3, probe-bracketed quiet windows): the
-# capped aggregate form dominates MOST of the space -- synthetic
-# shared-vocab corpus (ratio 0.63): aggregate 1.73 s vs prefix 4.08 s
-# at t=0.5, 1.41 vs 3.36 at t=0.8 (the 568k-candidate verify is the
-# prefix form's cost); rich-vocab corpus (ratio 0.99): 1.03 vs 1.11
-# at t=0.5 (aggregate still ahead), 1.21 vs 1.09 at t=0.8 (prefix's
-# ONE measured win, -10% -- short prefixes x near-unique grams leave
-# almost nothing to verify).  So the prefix form is gated on BOTH
-# conditions that produced that win, and the r7 docstring's "the
-# crossover flips on real-text gram distributions" claim is hereby
-# narrowed by measurement: it flips only at high thresholds on
-# near-unique gram universes.
-NGRAM_PROBE_DOCS = 512
-NGRAM_PREFIX_MIN_REUSE_RATIO = 0.95   # dense measured 0.63, sparse 0.99
-NGRAM_PREFIX_MIN_THRESHOLD = 0.7      # t=0.5 loses, t=0.8 wins
-
-
-def ngram_gram_reuse_probe(docs: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", n: int = 3,
-                           sample_docs: int = NGRAM_PROBE_DOCS) -> float:
-    """Gram-reuse density over a constant-size document sample: the
-    fraction of the sample's per-doc distinct gram slots that are
-    unique corpus-wide (1 / mean posting length).  One bounded job
-    regardless of corpus size (``limit`` stops the scan after
-    ``sample_docs`` rows)."""
-    grams = ngrams_from_tokens(F.col("_toks"), n)
-    row = (
-        _tokenized(docs.select(id_col, text_col).limit(sample_docs),
-                   id_col, text_col)
-        .select(F.explode(F.array_distinct(grams)).alias("_g"))
-        .agg(F.countDistinct("_g").alias("d"), F.count("*").alias("t"))
-        .first()
-    )
-    if row is None or not row["t"]:
-        return 0.0
-    return row["d"] / row["t"]
-
-
-_CAP_UNSET = object()  # sentinel: caller did not touch the skew caps
-
-
-def ngram_jaccard_pairs_auto(docs: DataFrame, id_col: str = "doc_id",
-                             text_col: str = "text", n: int = 3,
-                             threshold: float = 0.5,
-                             prefer: str | None = None,
-                             sample_docs: int = NGRAM_PROBE_DOCS,
-                             max_df=_CAP_UNSET,
-                             cap_mode=_CAP_UNSET,
-                             scratch_passes: int | str | None = None
-                             ) -> DataFrame:
-    """Selectivity-gated form selection between
-    :func:`ngram_jaccard_pairs` (capped inverted-index aggregate --
-    the skew-safe default and the measured winner over most of the
-    space) and :func:`ngram_jaccard_pairs_prefix` (prefix-filtered
-    set-similarity join -- measured to win only when grams are
-    near-unique AND the threshold is high; constants above).
-    ``prefer=None`` runs the bounded reuse probe and requires BOTH
-    measured win conditions before picking prefix; ``prefer=
-    "aggregate"``/``"prefix"`` pins it (tests, A/B) -- the same
-    explicit-override contract as ``flagship_nation_summary
-    (use_window=...)``.  Both forms emit the identical exact-Jaccard
-    relation (same oracle), so the gate is purely physical.
-
-    CAP CONTRACT: the prefix form carries no df cap (see its SKEW
-    POSTURE), so a REQUESTED cap can only be honored by the aggregate
-    form; the gate therefore never routes such a caller to prefix (the
-    requested cap pins the aggregate form and the probe job is
-    skipped), and combining a requested cap with ``prefer="prefix"``
-    raises rather than silently dropping it.  A cap counts as
-    REQUESTED only when an effective cap exists: an explicit non-None
-    ``max_df``, or an explicit ``cap_mode`` whose ``max_df`` resolves
-    non-None (i.e. left unset, so the default applies).  An explicit
-    ``max_df=None`` is the opposite request -- NO cap -- which BOTH
-    forms honor, so it leaves the gate free even alongside an explicit
-    ``cap_mode`` (the mode is then vacuous: there is no cap for it to
-    shape; both branches emit the identical uncapped exact-Jaccard
-    relation, the oracle-stable configuration for probe-gated
-    callers).  Left fully unset, the aggregate form runs with its
-    usual DEFAULT_MAX_DF filter cap -- skew-safe, but then the gate's
-    two branches differ wherever the cap bites, so oracle-paired
-    callers should pin the form or pass ``max_df=None``."""
-    from location_summary_etl_spark.operators.gates import gate
-
-    cap_touched = (max_df is not _CAP_UNSET or cap_mode is not _CAP_UNSET)
-    max_df = DEFAULT_MAX_DF if max_df is _CAP_UNSET else max_df
-    cap_mode = "filter" if cap_mode is _CAP_UNSET else cap_mode
-    # A cap is REQUESTED only when the caller touched the cap knobs AND
-    # an effective cap exists -- explicit max_df=None is behaviorally
-    # cap-free, so it never pins the gate (explicit cap_mode alongside
-    # it is vacuous rather than a request).
-    cap_requested = cap_touched and max_df is not None
-    if prefer == "prefix" and cap_requested:
-        raise ValueError(
-            "ngram_jaccard_pairs_auto: prefer='prefix' with a requested "
-            "max_df/cap_mode is contradictory -- the prefix form carries "
-            "no df cap; call ngram_jaccard_pairs_prefix directly if the "
-            "cap is disposable, or drop prefer to keep the cap")
-
-    def _decide() -> str:
-        if cap_requested:
-            # an explicitly requested skew cap only exists in the
-            # aggregate form -- never gate it away
-            return "aggregate"
-        if threshold >= NGRAM_PREFIX_MIN_THRESHOLD:
-            ratio = ngram_gram_reuse_probe(docs, id_col, text_col, n,
-                                           sample_docs)
-            return ("prefix" if ratio >= NGRAM_PREFIX_MIN_REUSE_RATIO
-                    else "aggregate")
-        # measured: at moderate thresholds the aggregate form wins at
-        # EVERY probed reuse ratio -- skip the probe job
-        return "aggregate"
-
-    prefer = gate(prefer, _decide)
-    if prefer == "prefix":
-        return ngram_jaccard_pairs_prefix(docs, id_col, text_col, n,
-                                          threshold)
-    if prefer == "aggregate":
-        return ngram_jaccard_pairs(docs, id_col, text_col, n, threshold,
-                                   max_df=max_df, cap_mode=cap_mode,
-                                   scratch_passes=scratch_passes)
-    raise ValueError(f"prefer must be 'prefix'/'aggregate'/None, "
-                     f"got {prefer!r}")
 
 
 def embedding_near_dups(emb: DataFrame, id_col: str = "vec_id",

@@ -25,7 +25,6 @@ from location_summary_etl_spark.operators.dedup import (
     minhash_near_dups,
     minhash_signatures,
     ngram_jaccard_pairs,
-    ngram_jaccard_pairs_auto,
     ngram_jaccard_pairs_prefix,
     simhash_near_dups,
     simhash_signatures,
@@ -204,8 +203,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 6
 def ngram_jaccard_sql(threshold: float) -> str:
     """UNCAPPED n-gram Jaccard oracle at ``threshold`` -- the semantic
     both the uncapped aggregate form and the prefix-filtered form
-    emit, so it is the stable pairing for the probe-gated auto entry
-    (whichever branch the gate picks)."""
+    emit."""
     return f"""
 WITH tok AS (
     SELECT doc_id, string_split(text, ' ') AS toks FROM documents
@@ -378,23 +376,11 @@ NGRAM_AUTO_THRESHOLD = 0.7
 
 
 def dedup_ngram_jaccard_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r8 selectivity gate as a PRODUCTION CALLER (r9 order #1):
-    ngram_jaccard_pairs_auto at t=0.7 runs the bounded gram-reuse
-    probe (one O(sample) job at any corpus scale) and picks the form.
-    On this corpus the probe measures ~0.63 reuse (< the 0.95 prefix
-    bound), so the gate lands on the aggregate.  The entry is
-    deliberately CAP-FREE (``max_df=None``): both gate branches then
-    emit the identical uncapped exact-Jaccard relation, so the oracle
-    pairing is stable no matter which branch a tier's probe sample
-    lands on -- a probe-dependent pairing against the capped SQL
-    would break the moment some corpus measured >= 0.95 reuse (the
-    prefix form carries no cap).  The bench headline keeps timing the
-    PINNED forms (dedup_ngram_jaccard / _prefix entries unchanged)
-    so r9/r8 stay comparable."""
-    return ngram_jaccard_pairs_auto(_docs(spark, sf_dir), n=3,
-                                    threshold=NGRAM_AUTO_THRESHOLD,
-                                    max_df=None,
-                                    scratch_passes=_ngram_scratch(sf_dir))
+    # Uncapped aggregate form at t=0.7: ``max_df=None`` pairs it with
+    # the uncapped exact-Jaccard oracle.
+    return ngram_jaccard_pairs(_docs(spark, sf_dir), n=3,
+                               threshold=NGRAM_AUTO_THRESHOLD, max_df=None,
+                               scratch_passes=_ngram_scratch(sf_dir))
 
 
 def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,7 +22,7 @@ from location_summary_etl_spark.functions.scalars import (
     sum_fixed_point,
 )
 from location_summary_etl_spark.operators.aggregates import multi_avg
-from location_summary_etl_spark.operators.normalize import minmax_score_auto
+from location_summary_etl_spark.operators.normalize import minmax_score_window
 from location_summary_etl_spark.operators.snapshot import (
     global_latest_filter,
     latest_snapshot_window,
@@ -206,22 +206,20 @@ LEFT JOIN (
 
 
 # --------------------------------------------------------------------
-# B7/B8: grand-total min/max broadcast into a 0-100 min-max score
+# B7/B8: grand-total min/max into a 0-100 min-max score
 # (App.scala:175-201), per-nation account balances.
 def nation_balance_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B7/B8 through the STATS GATE (r9): minmax_score_auto picks the
-    single-lineage window form while the lineage's source bytes stay
-    provably small (customer is 312 KB at sf0.1 against the 8 MB
-    bound, so the bench plan is the same window plan this entry always
-    ran -- r8/r9 comparable by construction) and flips to the
-    distributed broadcast form on unbounded inputs.  Gate behavior is
-    plan-asserted in tests/test_plans.py."""
+    """B7/B8 as one lineage: the window-form score runs over the
+    nation-grain ``groupBy`` aggregate, so its single-partition pass
+    sits above that aggregate's exchange at any input size (one
+    customer scan, no bounds broadcast; plan-asserted in
+    tests/test_plans.py)."""
     customer = _t(spark, sf_dir, "customer")
     bal = customer.groupBy("c_nationkey").agg(
         # F.count(col) skips nulls -- preserves AVG's null semantics
         (F.sum(fixed_units("c_acctbal", 2))
          / (F.lit(100.0) * F.count("c_acctbal"))).alias("avg_bal"))
-    return minmax_score_auto(bal, "avg_bal", "bal_score").select(
+    return minmax_score_window(bal, "avg_bal", "bal_score").select(
         "c_nationkey",
         round_portable("avg_bal", 2).alias("avg_bal"),
         round_portable("bal_score", 2).alias("bal_score"),

@@ -13,74 +13,16 @@ star schema:
     min-max crime/expense score   min-max price score (in-plan)
     summary_zip_code append       summary dataframe (writer in sources)
 
-Scale notes: the only wide shuffles are the two groupBys (customer-key
-argmax, nation-key aggregates); both are partial-aggregated map-side.
-All dimension joins are broadcast.  The min-max bounds and the audit
-snapshot date are 1-row broadcast joins, not driver collects, so the
-whole job is a single lineage with no eager actions
+Scale notes: the wide shuffles are the customer-key argmax (one hash
+exchange of the orders scan, sorted for the window) and the nation-key
+aggregates (partial-aggregated map-side).  All dimension joins are
+broadcast.  The min-max bounds and the audit snapshot date ride one
+window pass over the nation-grain aggregate, not driver collects, so
+the whole job is a single lineage with no eager actions
 (vs. the reference's 2 blocking ``.first`` calls at App.scala:179,195).
-
-Measured dead ends (r5, sf0.1 local[32], min-of-6 noop-sink runs,
-side-by-side in one session -- kept so the next tuner doesn't retry
-them).  The r4 verdict suggested fusing the two customer scans
-(per_nation inner-join + the separate ``bal`` aggregate):
-
-* **Customer-scan fusion** (pre-aggregate latest per customer, LEFT
-  join into customer 1:1, single nation-grain groupBy computing both
-  aggregates): 0.52-0.64 s vs 0.43-0.57 s for this plan (+15-20%).
-  The 15k-row dimension re-scan the fusion deletes costs ~nothing at
-  bench scale, while the extra blocking pre-aggregate sits on the hot
-  path.
-* **Fused single-scan argmax** (groupBy (custkey, orderdate) pre-agg
-  -> max(struct(date, stats)) -- one orders scan, no join-back):
-  0.79-0.82 s vs 0.60-0.63 s (+30%).  The argmax JOIN form never
-  shuffles orders at all (the per-key maxes broadcast and the
-  join-back streams the scan), so "scan orders once but shuffle the
-  whole (custkey, date) pre-aggregate" loses to "scan orders twice,
-  shuffle nothing wide".
-
-Both fusions would win only where customer is too big to rescan
-cheaply AND the per-cust maxes too big to broadcast -- at that point
-flip ``use_window=True`` (single orders scan+shuffle) rather than
-resurrecting these shapes.
-
-Confirmed at the 100x tier (bench_tiers/sf10, 1.5M customers / 15M
-orders, min-of-3 interleaved in one session): join form 2.13-2.36 s,
-fused single-scan 1.96-2.00 s (the fusion DOES cross over once the
-per-cust max broadcast reaches ~20 MB), window form 1.71 s -- the
-``use_window`` flip beats the fused shape exactly as predicted.  As of
-r7 the flip is AUTOMATIC: ``use_window=None`` estimates the max side's
-broadcast size from the customer table's source bytes and flips to the
-window form when it exceeds a quarter of the session broadcast cap
-(constants and measurements in :func:`flagship_nation_summary`).  The
-r7 re-measurement moved the crossover EARLIER than r5's: the window
-form already wins at sf1 (0.46 vs 0.63 s) and ties at sf0.1, so the
-gate flips between those tiers; at bench scale it keeps the join form.
-
-MEASURED FLOOR for the window form's sf10 residue (r8,
-probe-bracketed quiet window [0.92..1.29 s],
-min-of-4 interleaved noop-sink runs, cumulative stages):
-
-    orders (custkey, date, totalprice) bare scan   0.104 s
-    + hash exchange on o_custkey                   0.861 s
-    + sortWithinPartitions                         0.924 s
-    + window max + filter (the argmax)             1.061 s
-    full query (joins, aggs, score, dims)          1.834 s
-
-The single fact EXCHANGE is 0.76 s -- alone 2.3x DuckDB's entire
-query (0.333 s): the residue is shuffle materialization (ser/de +
-spill files for 15M x 24 B rows) plus the downstream customer-side
-exchange pair, not a removable plan stage.  The sort the window adds
-costs 0.06 s (ints, radix-friendly) -- so the "sort-free" rewrite the
-r7 verdict suggested was measured and LOSES: a reused-exchange
-hash-agg argmax (maxes and probe sharing ONE shuffled child via
-ReusedExchange, AQE SMJ->SHJ, zero sorts) takes 1.931 s for the
-argmax alone and 2.533 s end-to-end -- building a 1.5M-entry hash
-relation per partition costs 14x the sort it removes.  Both exchanges
-shrink per-task with executor count while DuckDB's in-process hash
-agg is single-node by construction; this is the same
-distributed-shuffle-tax floor as ``top_orders_per_nation``
-(plans/corpus_reference.py), now decomposed to the same standard.
+The argmax takes the window form at every input size; the join form
+and the fused shapes it was measured against are recorded in
+OPTIMIZATION_r14.md ("Dual-form selectors retired").
 """
 
 from __future__ import annotations
@@ -94,13 +36,11 @@ from location_summary_etl_spark.functions.scalars import (
 )
 from location_summary_etl_spark.operators.normalize import minmax_score_window
 from location_summary_etl_spark.operators.snapshot import (
-    latest_snapshot_join,
     latest_snapshot_window,
 )
 from location_summary_etl_spark.operators.windows import (
     guarded_unpartitioned,
 )
-from location_summary_etl_spark.operators.gates import gate, source_fits
 from location_summary_etl_spark.sources.registry import load_table
 
 FINAL_COLS = [
@@ -108,16 +48,8 @@ FINAL_COLS = [
     "price_score", "snapshot_date",
 ]
 
-# Auto-gate cost constants (measured r7; see the comment in
-# flagship_nation_summary): compressed-parquet -> in-memory
-# HashedRelation expansion for the (custkey, date) max side, and the
-# cap fraction above which a broadcast is no longer a clear win.
-_MAXSIDE_EXPANSION = 4
-_BROADCAST_MARGIN = 4
 
-
-def flagship_nation_summary(spark: SparkSession, sf_dir: str,
-                            use_window: bool | None = None) -> DataFrame:
+def flagship_nation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per nation: avg customer balance, avg/count of each customer's
     latest order, min-max normalized 0-100 price score, audit date."""
     nation = load_table(spark, sf_dir, "nation")
@@ -125,35 +57,11 @@ def flagship_nation_summary(spark: SparkSession, sf_dir: str,
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
 
-    # A3: greatest-n-per-group -- latest order(s) per customer.  Two
-    # forms, auto-selected by input stats (use_window=None); an explicit
-    # bool pins the form (tests, A/B).  The join form wins only while
-    # the per-customer MAX side is a CHEAP broadcast (the pre-aggregate
-    # combines map-side and the join-back streams the orders scan -- no
-    # wide shuffle at all).  As the side grows, broadcast build+ship
-    # cost plus the second orders scan overtake the window form's
-    # single shuffle+sort.  Measured (r7, min-of-6/8 interleaved
-    # noop-sink runs, one session per tier): sf0.1 join 0.39 s vs
-    # window 0.33 s (tie within host noise), sf1 0.63 vs 0.46 (window
-    # -27%), sf10 4.22 vs 2.88 (window -32%) -- the crossover lands
-    # between sf0.1 and sf1, i.e. while the max side still FITS the
-    # 32 MB session cap (~10 MB estimated at sf1): a near-cap broadcast
-    # is already a losing plan, and at 1000 executors it is cap x
-    # executors of aggregate network traffic besides.  Gate, driver-side
-    # stats only (no job): estimated max-side broadcast bytes =
-    # customer source bytes x4 (measured ~17 B/row compressed parquet
-    # -> ~64 B/row (custkey, date) HashedRelation; the side has
-    # <= |customer| rows) must stay under a QUARTER of the session
-    # broadcast cap.  Unknown stats (non-file source) flip
-    # conservatively to the window form: one declarative shuffle, never
-    # a forced-broadcast OOM.  Both forms keep ties, per the
-    # reference's 3-way-join semantics (App.scala:41-48).
-    use_window = gate(
-        use_window,
-        lambda: not source_fits(customer, expansion=_MAXSIDE_EXPANSION,
-                                fraction=_BROADCAST_MARGIN))
-    argmax = latest_snapshot_window if use_window else latest_snapshot_join
-    latest = argmax(orders, ["o_custkey"], "o_orderdate")
+    # A3: greatest-n-per-group -- latest order(s) per customer, ties
+    # kept per the reference's 3-way-join semantics (App.scala:41-48).
+    # One hash exchange on o_custkey at any scale; no broadcast side
+    # whose size grows with |customer|.
+    latest = latest_snapshot_window(orders, ["o_custkey"], "o_orderdate")
 
     # B4/B5: join to customer, aggregate to nation grain.  The same
     # aggregate also carries max(o_orderdate): the ``latest`` rows hold

@@ -24,41 +24,18 @@ def test_flagship_vs_oracle(spark, sf_dir):
     compare(df, duckdb_con(sf_dir), FLAGSHIP_ORACLE_SQL)
 
 
-def test_flagship_join_formulation_matches_window(spark, sf_dir):
-    a = flagship_nation_summary(spark, sf_dir, use_window=True)
-    b = flagship_nation_summary(spark, sf_dir, use_window=False)
-    assert sorted(map(str, a.collect())) == sorted(map(str, b.collect()))
-
-
-def _argmax_form(df) -> str:
-    """Which greatest-n-per-group form the plan took: the window form
-    plans a Window over o_custkey; the join form plans the max-side
-    aggregate join-back (no Window over the orders lineage)."""
-    opt = df._jdf.queryExecution().optimizedPlan().toString()
-    return "window" if "windowspecdefinition(o_custkey" in opt else "join"
-
-
-def test_flagship_auto_form_flips_on_input_stats(spark, sf_dir):
-    """use_window=None selects the argmax form from customer source
-    bytes vs the session broadcast cap: join form while the per-cust
-    max side broadcasts, window form once it outgrows the cap (the
-    measured 100x-tier crossover -- flagship.py module docstring)."""
+def test_flagship_argmax_is_window_form_at_any_broadcast_cap(spark, sf_dir):
+    """The latest-order argmax is planned as a window over o_custkey
+    whatever the session broadcast cap: no stats-driven switch to the
+    broadcast join-back form at small inputs."""
     cap_conf = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(cap_conf)
     try:
-        # bench scale: customer is far below the default 10 MB cap
-        spark.conf.set(cap_conf, "10MB")
-        assert _argmax_form(flagship_nation_summary(spark, sf_dir)) == "join"
-        # simulated large tier: the same files exceed a 1 KB cap, which
-        # is exactly the sf10 situation (customer source bytes > cap)
-        spark.conf.set(cap_conf, "1KB")
-        assert _argmax_form(flagship_nation_summary(spark, sf_dir)) == "window"
-        # explicit pins override the gate in both directions
-        assert _argmax_form(
-            flagship_nation_summary(spark, sf_dir, use_window=False)) == "join"
-        spark.conf.set(cap_conf, "10MB")
-        assert _argmax_form(
-            flagship_nation_summary(spark, sf_dir, use_window=True)) == "window"
+        for cap in ("10MB", "1KB"):
+            spark.conf.set(cap_conf, cap)
+            opt = flagship_nation_summary(
+                spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
+            assert "windowspecdefinition(o_custkey" in opt, cap
     finally:
         spark.conf.set(cap_conf, old)
 

@@ -1,32 +1,13 @@
-"""operators/gates.py -- the single implementation behind every
-stats-gated dual-form operator (flagship argmax, minmax_score_auto,
-ngram_jaccard_pairs_auto).  The per-operator flip behavior is covered
-by their own tests (test_operators.py, test_plans.py); these pin the
-shared contract itself."""
+"""operators/gates.py -- the single byte-threshold compare behind every
+size gate (broadcast_if_small, compile_tiny_dim, the n-gram scratch
+floor).  The per-caller behavior is covered by their own tests
+(test_operators.py, test_plans.py); these pin the shared contract
+itself."""
 
 import pytest
 
-from location_summary_etl_spark.operators.gates import gate, source_fits
+from location_summary_etl_spark.operators.gates import source_fits
 from location_summary_etl_spark.sources.registry import load_table
-
-
-def test_gate_pin_wins_and_decide_is_lazy():
-    # a pinned form never evaluates the probe
-    def boom():
-        raise AssertionError("decide() must not run when pinned")
-
-    assert gate(True, boom) is True
-    assert gate(False, boom) is False  # falsy pins still win
-    assert gate("prefix", boom) == "prefix"
-    # deferral evaluates decide exactly once
-    calls = []
-
-    def decide():
-        calls.append(1)
-        return "aggregate"
-
-    assert gate(None, decide) == "aggregate"
-    assert calls == [1]
 
 
 def test_source_fits_thresholds(spark, sf_dir):
@@ -40,11 +21,6 @@ def test_source_fits_thresholds(spark, sf_dir):
         # same file over a tiny cap: does not fit
         spark.conf.set(cap_conf, "1KB")
         assert not source_fits(customer)
-        # expansion and fraction both tighten the bound: pick a cap
-        # where the bare file fits but the scaled estimate does not
-        spark.conf.set(cap_conf, "1GB")
-        assert not source_fits(customer, expansion=1_000_000)
-        assert not source_fits(customer, fraction=1_000_000)
         # explicit cap_bytes bypasses the session conf
         assert source_fits(customer, cap_bytes=1 << 40)
         assert not source_fits(customer, cap_bytes=1)
@@ -64,8 +40,6 @@ def test_fits_and_path_fits(tmp_path):
     assert fits(100, cap_bytes=100)
     assert not fits(101, cap_bytes=100)
     assert not fits(None, cap_bytes=1 << 40)  # unknown -> conservative
-    assert not fits(60, expansion=2, cap_bytes=100)
-    assert not fits(60, fraction=2, cap_bytes=100)
 
     f = tmp_path / "dim.bin"
     f.write_bytes(b"x" * 1000)
@@ -105,12 +79,6 @@ def test_tiny_dim_bytes_pregate_refuses_before_reading(sf_dir, monkeypatch):
 
 
 @pytest.mark.parametrize("mod,names", [
-    ("location_summary_etl_spark.plans.flagship",
-     ["gate", "source_fits"]),
-    ("location_summary_etl_spark.operators.normalize",
-     ["minmax_score_auto"]),
-    ("location_summary_etl_spark.operators.dedup",
-     ["ngram_jaccard_pairs_auto"]),
     ("location_summary_etl_spark.session",
      ["broadcast_if_small"]),
     ("location_summary_etl_spark.sources.registry",
@@ -118,19 +86,11 @@ def test_tiny_dim_bytes_pregate_refuses_before_reading(sf_dir, monkeypatch):
 ])
 def test_all_callers_share_one_implementation(mod, names):
     """No caller carries a private copy of the byte compare: each
-    imports from operators.gates (flagship at module level; the
-    others lazily inside the function body)."""
+    imports from operators.gates lazily inside the function body."""
     import importlib
     import inspect
 
     m = importlib.import_module(mod)
-    if "gate" in names:  # flagship: module-level import
-        from location_summary_etl_spark.operators import gates
-
-        assert m.gate is gates.gate
-        assert m.source_fits is gates.source_fits
-    else:
-        src = inspect.getsource(getattr(m, names[0]))
-        assert ("operators.gates import gate" in src
-                or "operators.gates import source_fits" in src
-                or "operators.gates import path_fits" in src)
+    src = inspect.getsource(getattr(m, names[0]))
+    assert ("operators.gates import source_fits" in src
+            or "operators.gates import path_fits" in src)

@@ -18,10 +18,7 @@ from location_summary_etl_spark.operators.multimodal import (
     attach_fake_media,
     decode_media,
 )
-from location_summary_etl_spark.operators.normalize import (
-    minmax_score,
-    minmax_score_window,
-)
+from location_summary_etl_spark.operators.normalize import minmax_score_window
 from location_summary_etl_spark.operators.snapshot import (
     latest_snapshot_join,
     latest_snapshot_window,
@@ -79,15 +76,14 @@ def test_sessionize_gap_boundary(spark):
 
 def test_minmax_single_group_and_negatives(spark):
     df = spark.createDataFrame([(1, -10.0), (2, 0.0), (3, 10.0)], ["id", "v"])
-    want = {1: 0.0, 2: 50.0, 3: 100.0}
-    for fn in (minmax_score, minmax_score_window):
-        got = {r["id"]: r["s"] for r in fn(df, "v", "s").collect()}
-        assert got == want, fn.__name__
-    # max == min -> NULL score, both formulations
+    got = {r["id"]: r["s"]
+           for r in minmax_score_window(df, "v", "s").collect()}
+    assert got == {1: 0.0, 2: 50.0, 3: 100.0}
+    # max == min -> NULL score
     flat = spark.createDataFrame([(1, 5.0), (2, 5.0)], ["id", "v"])
-    for fn in (minmax_score, minmax_score_window):
-        got = {r["id"]: r["s"] for r in fn(flat, "v", "s").collect()}
-        assert got == {1: None, 2: None}, fn.__name__
+    got = {r["id"]: r["s"]
+           for r in minmax_score_window(flat, "v", "s").collect()}
+    assert got == {1: None, 2: None}
 
 
 def test_guarded_unpartitioned_fires_and_folds(spark):
@@ -2039,156 +2035,38 @@ def test_pagerank_matches_python_replay(spark):
         assert abs(got[n] - ranks[n]) < 1e-12, (n, got[n], ranks[n])
 
 
-# ------------------------------------------------ r8 dual-form auto-gates
+# ------------------------------------------- n-gram physical-form parity
 
 
-def test_minmax_score_auto_flips_on_source_bytes(spark, sf_dir):
-    """minmax_score_auto picks the window form only while the lineage's
-    source bytes fit cap/_WINDOW_SOURCE_FRACTION; unknown stats (no
-    file lineage) take the always-correct broadcast form; explicit
-    pins override in both directions -- the flagship gate contract."""
-    from location_summary_etl_spark.operators.normalize import (
-        minmax_score_auto,
-    )
-    from location_summary_etl_spark.sources.registry import load_table
-
-    def form(df):
-        opt = df._jdf.queryExecution().optimizedPlan().toString()
-        return "window" if "windowspecdefinition(" in opt else "broadcast"
-
-    customer = load_table(spark, sf_dir, "customer")
-    cap_conf = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(cap_conf)
-    try:
-        # test-scale file well under cap/4 -> single-lineage window
-        spark.conf.set(cap_conf, "100MB")
-        assert form(minmax_score_auto(customer, "c_acctbal", "s")) == "window"
-        # same file over a 1KB cap -> the simulated-large flip
-        spark.conf.set(cap_conf, "1KB")
-        assert form(
-            minmax_score_auto(customer, "c_acctbal", "s")) == "broadcast"
-        # unknown stats (literal frame, no input files) -> conservative
-        spark.conf.set(cap_conf, "100MB")
-        lit = spark.createDataFrame([(1.0,), (2.0,)], "c_acctbal double")
-        assert form(minmax_score_auto(lit, "c_acctbal", "s")) == "broadcast"
-        # explicit pins beat the gate both ways
-        spark.conf.set(cap_conf, "1KB")
-        assert form(minmax_score_auto(
-            customer, "c_acctbal", "s", use_window=True)) == "window"
-        spark.conf.set(cap_conf, "100MB")
-        assert form(minmax_score_auto(
-            customer, "c_acctbal", "s", use_window=False)) == "broadcast"
-        # the two forms remain value-identical on the same input
-        a = sorted(str(r) for r in minmax_score_auto(
-            customer, "c_acctbal", "s", use_window=True).collect())
-        b = sorted(str(r) for r in minmax_score_auto(
-            customer, "c_acctbal", "s", use_window=False).collect())
-        assert a == b
-    finally:
-        spark.conf.set(cap_conf, old)
-
-
-def test_ngram_auto_selects_by_reuse_probe_and_threshold(spark):
-    """ngram_jaccard_pairs_auto: prefix is picked ONLY under both
-    measured win conditions (reuse probe >= NGRAM_PREFIX_MIN_REUSE_
-    RATIO and threshold >= NGRAM_PREFIX_MIN_THRESHOLD); every other
-    cell of the (corpus, threshold) grid takes the aggregate form --
-    the r8 measurement grid (operators/dedup.py constants).  Asserted
-    on plan shape; pins override; both forms emit the identical
-    relation."""
+def test_ngram_prefix_matches_uncapped_aggregate(spark):
+    """The prefix-filtered join and the uncapped inverted-index
+    aggregate are two physical plans for one exact-Jaccard relation:
+    identical rows at a moderate and a high threshold, on near-unique
+    grams (the corpus where the prefix form prunes the most) and on
+    sliding word windows whose pair Jaccards straddle both thresholds
+    (offset d shares 6-d of 6 trigrams: 1.0, 0.71, 0.5, ...)."""
     from location_summary_etl_spark.operators.dedup import (
-        NGRAM_PREFIX_MIN_REUSE_RATIO,
-        ngram_gram_reuse_probe,
-        ngram_jaccard_pairs_auto,
-    )
-
-    dense = spark.createDataFrame(
-        [(i, "alpha beta gamma delta alpha beta gamma") for i in range(40)],
-        "doc_id long, text string")
-    sparse = spark.createDataFrame(
-        [(i, " ".join(f"u{i}w{j}" for j in range(8))) for i in range(40)],
-        "doc_id long, text string")
-
-    r_dense = ngram_gram_reuse_probe(dense)
-    r_sparse = ngram_gram_reuse_probe(sparse)
-    assert r_dense < NGRAM_PREFIX_MIN_REUSE_RATIO < r_sparse, (
-        r_dense, r_sparse)
-
-    def form(df):
-        opt = df._jdf.queryExecution().optimizedPlan().toString()
-        return "prefix" if "array_intersect" in opt else "aggregate"
-
-    # the one measured-win cell: sparse grams AND high threshold
-    assert form(ngram_jaccard_pairs_auto(sparse, threshold=0.8)) == "prefix"
-    # every other cell: aggregate
-    assert form(ngram_jaccard_pairs_auto(sparse)) == "aggregate"  # t=0.5
-    assert form(ngram_jaccard_pairs_auto(dense, threshold=0.8)) == "aggregate"
-    assert form(ngram_jaccard_pairs_auto(dense)) == "aggregate"
-    # explicit pins beat the gate in both directions
-    assert form(ngram_jaccard_pairs_auto(dense, prefer="prefix")) == "prefix"
-    assert form(ngram_jaccard_pairs_auto(
-        sparse, threshold=0.8, prefer="aggregate")) == "aggregate"
-
-    a = sorted(str(r) for r in ngram_jaccard_pairs_auto(
-        sparse, prefer="aggregate").collect())
-    b = sorted(str(r) for r in ngram_jaccard_pairs_auto(
-        sparse, prefer="prefix").collect())
-    assert a == b
-
-
-def test_ngram_auto_requested_cap_is_never_gated_away(spark):
-    """The r9 cap contract (ADVICE r8): a caller who REQUESTS a cap
-    (non-None max_df, or an explicit cap_mode) is asking for skew
-    safety, which only the aggregate form provides -- the gate must
-    pin aggregate even in prefix's measured-win cell (and skip the
-    probe job), and the contradictory prefer='prefix' + requested-cap
-    combination raises instead of silently dropping the cap.  An
-    explicit max_df=None is the OPPOSITE request (no cap, which both
-    forms honor) and leaves the gate free -- the oracle-stable
-    configuration the probe-gated corpus entry uses."""
-    import pytest as _pytest
-
-    from location_summary_etl_spark.operators.dedup import (
-        ngram_jaccard_pairs_auto,
+        ngram_jaccard_pairs_prefix,
     )
 
     sparse = spark.createDataFrame(
         [(i, " ".join(f"u{i}w{j}" for j in range(8))) for i in range(40)],
         "doc_id long, text string")
-
-    def form(df):
-        opt = df._jdf.queryExecution().optimizedPlan().toString()
-        return "prefix" if "array_intersect" in opt else "aggregate"
-
-    # sparse + t=0.8 is the prefix win cell (asserted above); a
-    # requested cap must override it in both spellings
-    assert form(ngram_jaccard_pairs_auto(
-        sparse, threshold=0.8, max_df=100)) == "aggregate"
-    assert form(ngram_jaccard_pairs_auto(
-        sparse, threshold=0.8, cap_mode="census")) == "aggregate"
-    # explicit max_df=None = cap-free: the gate stays free and still
-    # picks prefix in its win cell
-    assert form(ngram_jaccard_pairs_auto(
-        sparse, threshold=0.8, max_df=None)) == "prefix"
-
-    with _pytest.raises(ValueError, match="contradictory"):
-        ngram_jaccard_pairs_auto(sparse, threshold=0.8, prefer="prefix",
-                                 max_df=100)
-    # an explicit cap_mode whose max_df is left to default IS an
-    # effective-cap request, so it is contradictory with prefix too
-    with _pytest.raises(ValueError, match="contradictory"):
-        ngram_jaccard_pairs_auto(sparse, threshold=0.8, prefer="prefix",
-                                 cap_mode="census")
-    # prefix + cap-free is NOT contradictory
-    ngram_jaccard_pairs_auto(sparse, threshold=0.8, prefer="prefix",
-                             max_df=None)
-    # ADVICE r9: explicit cap_mode ALONGSIDE explicit max_df=None is
-    # behaviorally cap-free (no cap for the mode to shape) -- it must
-    # neither pin the gate nor count as contradictory with prefix
-    assert form(ngram_jaccard_pairs_auto(
-        sparse, threshold=0.8, max_df=None, cap_mode="census")) == "prefix"
-    ngram_jaccard_pairs_auto(sparse, threshold=0.8, prefer="prefix",
-                             max_df=None, cap_mode="census")
+    graded = spark.createDataFrame(
+        [(i, " ".join(f"w{j}" for j in range(i % 5, i % 5 + 8)))
+         for i in range(40)],
+        "doc_id long, text string")
+    pairs = {}
+    for name, docs in (("sparse", sparse), ("graded", graded)):
+        for t in (0.5, 0.8):
+            a = sorted(str(r) for r in ngram_jaccard_pairs(
+                docs, threshold=t, max_df=None).collect())
+            b = sorted(str(r) for r in ngram_jaccard_pairs_prefix(
+                docs, threshold=t).collect())
+            assert a == b, (name, t)
+            pairs[name, t] = len(a)
+    # the graded corpus exercises both thresholds non-trivially
+    assert 0 < pairs["graded", 0.8] < pairs["graded", 0.5], pairs
 
 
 def test_fixed_point_aggregates_exact_and_order_free(spark):

@@ -622,14 +622,10 @@ def test_q3_eager_form_matches_above_join_spec_on_edge_data(spark, tmp_path):
     assert len(got) == 10 and len(rev) > 10, "limit path not exercised"
 
 
-def test_nation_balance_score_gate_routes_to_window_form(spark, sf_dir):
-    """nation_balance_score now routes through minmax_score_auto (r9
-    order #1): at any bench-testable scale the customer source is far
-    under cap/4, so the gate must land on the SAME single-lineage
-    window plan the entry always ran (one customer scan, a
-    windowspecdefinition, no broadcast of a bounds relation) -- the
-    r8/r9 bench-comparability pin.  The flip side (broadcast on
-    unbounded inputs) is covered by the operator-level gate test."""
+def test_nation_balance_score_is_single_lineage_window(spark, sf_dir):
+    """nation_balance_score scores its nation-grain aggregate with the
+    window form: one customer scan, a windowspecdefinition, no
+    broadcast of a bounds relation."""
     from location_summary_etl_spark.plans.corpus_reference import (
         nation_balance_score,
     )
@@ -640,6 +636,55 @@ def test_nation_balance_score_gate_routes_to_window_form(spark, sf_dir):
     phys = df._jdf.queryExecution().executedPlan().toString()
     # single lineage: exactly one customer scan feeds the whole plan
     assert phys.count("customer.parquet") == 1, phys
+
+
+def _scans_without_exchange_below(node) -> list[str]:
+    """Names of the parquet scans reachable from ``node`` (a JVM
+    SparkPlan) without crossing an exchange."""
+    name = node.nodeName()
+    if name.endswith("Exchange"):
+        return []
+    if name.startswith("Scan parquet"):
+        return [name]
+    kids = node.children()
+    return [s for i in range(kids.size())
+            for s in _scans_without_exchange_below(kids.apply(i))]
+
+
+def _coalesce_nodes(node) -> list:
+    kids = node.children()
+    found = [node] if node.nodeName() == "Coalesce" else []
+    for i in range(kids.size()):
+        found += _coalesce_nodes(kids.apply(i))
+    return found
+
+
+@pytest.mark.parametrize("cap", [None, "1KB"])
+@pytest.mark.parametrize("entry", ["flagship_nation_summary",
+                                   "nation_balance_score"])
+def test_minmax_window_coalesce_sits_above_an_exchange(spark, sf_dir,
+                                                       entry, cap):
+    """minmax_score_window's coalesce(1) serializes the stage that
+    produces its input, so for every caller each Coalesce must have an
+    Exchange between it and every parquet scan below it: the scans
+    keep their width at any input size.  Checked at the default
+    broadcast cap and again at 1 KB, where no side auto-broadcasts."""
+    cap_conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(cap_conf)
+    try:
+        if cap is not None:
+            spark.conf.set(cap_conf, cap)
+        df = contract.queries()[entry](spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()
+        coalesces = _coalesce_nodes(plan)
+        assert coalesces, f"{entry}: no Coalesce in plan\n{plan}"
+        for c in coalesces:
+            fused = _scans_without_exchange_below(c)
+            assert not fused, f"{entry}: Coalesce fuses scans {fused}\n{plan}"
+    finally:
+        spark.conf.set(cap_conf, old)
 
 
 def test_recursive_chain_cap_sized_to_input(spark, sf_dir):
