@@ -19,7 +19,7 @@ never a crash.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -29,12 +29,16 @@ def _score_expr(v, mn, mx):
     return F.when(mx != mn, (v - mn) / (mx - mn) * F.lit(100.0))
 
 
-def minmax_score_window(df: DataFrame, col: str, out_col: str) -> DataFrame:
+def minmax_score_window(df: DataFrame, col: str, out_col: str,
+                        **also: Column) -> DataFrame:
     """Single-lineage min-max score: global min/max via an
     empty-partition window.  ``df`` must be aggregate-sized (all rows
     land in one partition for the window pass) -- enforced in-plan by
     :func:`~location_summary_etl_spark.operators.windows.guarded_unpartitioned`
     (raise_error past 100k rows), sharing the same WindowExec pass.
+    ``also`` adds further named columns in the same projection (one
+    plan analysis instead of one per ``withColumn``), typically other
+    guarded aggregates over the same empty window.
 
     SCALE CONTRACT: the input is ``coalesce(1)``-ed, a narrow
     dependency, so this statically serializes the stage that PRODUCES
@@ -57,10 +61,8 @@ def minmax_score_window(df: DataFrame, col: str, out_col: str) -> DataFrame:
     # The 100k-row guard still enforces the claim at run time.
     w = Window.partitionBy()
     df = df.coalesce(1)
-    return df.withColumn(
-        out_col,
-        guarded_unpartitioned(
-            _score_expr(F.col(col), F.min(col).over(w), F.max(col).over(w)),
-            "minmax_score_window input",
-        ),
+    score = guarded_unpartitioned(
+        _score_expr(F.col(col), F.min(col).over(w), F.max(col).over(w)),
+        "minmax_score_window input",
     )
+    return df.withColumns({out_col: score, **also})

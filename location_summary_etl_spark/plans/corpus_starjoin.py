@@ -260,9 +260,9 @@ def region_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"WHEN {nk} THEN '{nn}'" for nk, nn, nrk in nat
             if nrk in rkeys) + " END"
         pruned_customers = (
-            customer.select("c_custkey", "c_nationkey")
-            .filter(F.col("c_nationkey").isin(nkeys))
-            .withColumn("n_name", F.expr(name_case))
+            customer.filter(F.col("c_nationkey").isin(nkeys))
+            .select("c_custkey", "c_nationkey",
+                    F.expr(name_case).alias("n_name"))
         )
     else:  # dims outgrew the literal cap: broadcast-join chain
         nation = load_table(spark, sf_dir, "nation")

@@ -47,6 +47,7 @@ FINAL_COLS = [
     "n_name", "r_name", "avg_acctbal", "avg_order_total", "order_count",
     "price_score", "snapshot_date",
 ]
+_ROUNDED = {"avg_acctbal", "avg_order_total", "price_score"}
 
 
 def flagship_nation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,27 +101,24 @@ def flagship_nation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guarded_unpartitioned enforces the aggregate-sized claim in-plan
     # (same empty window spec as the score bounds -> CollapseWindow
     # folds score, snapshot date, and both guards into ONE WindowExec).
+    # _max_odate rides along to the final projection, which drops it.
     scored = minmax_score_window(
-        per_nation, "avg_order_total", "price_score"
-    ).withColumn(
-        "snapshot_date",
-        guarded_unpartitioned(
+        per_nation, "avg_order_total", "price_score",
+        snapshot_date=guarded_unpartitioned(
             F.max("_max_odate").over(Window.partitionBy()),
             "flagship per-nation aggregate"),
-    ).drop("_max_odate")
+    )
 
-    out = (
+    return (
         scored.join(bal, "c_nationkey", "inner")
         .join(F.broadcast(nation), scored["c_nationkey"] == nation["n_nationkey"], "inner")
         .join(F.broadcast(region), nation["n_regionkey"] == region["r_regionkey"], "inner")
-        # B12: round display columns (score computed on unrounded input).
+        # B14 final projection, with B12 in the same step: round the
+        # display columns (score computed on unrounded input).
         # round_portable, not F.round: matches DuckDB's double rounding.
-        .withColumn("avg_acctbal", round_portable("avg_acctbal", 2))
-        .withColumn("avg_order_total", round_portable("avg_order_total", 2))
-        .withColumn("price_score", round_portable("price_score", 2))
-        .select(*FINAL_COLS)  # B14 final projection
+        .select(*(round_portable(c, 2).alias(c) if c in _ROUNDED else c
+                  for c in FINAL_COLS))
     )
-    return out
 
 
 FLAGSHIP_ORACLE_SQL = """

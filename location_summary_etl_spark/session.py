@@ -14,6 +14,11 @@ that matter at scale:
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
 - Arrow enabled for the pandas-UDF paths (vector similarity,
   multimodal decode).
+- PySpark's DataFrame-debugging call-site capture off: it walks the
+  Python stack and sends ~9 extra py4j commands on every Column or
+  function call, most of the commands plan construction sends.
+  PySpark reads the setting once per process, so it is a launch
+  setting.
 """
 
 from __future__ import annotations
@@ -24,7 +29,13 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
 
 
 def _parse_bytes(raw: str, default: int) -> int:
@@ -348,6 +359,20 @@ def get_session(app_name: str = "location-summary-etl-spark",
                 master: str | None = None,
                 shuffle_partitions: int | None = None,
                 extra_conf: dict | None = None) -> SparkSession:
+    """Get or create the engine's session: ``local[<cpus>]`` unless
+    ``master`` is given, ``cpus`` shuffle partitions unless
+    ``shuffle_partitions`` is given, and the settings below.
+    ``extra_conf`` is applied last, so it overrides any of them.
+
+    - DataFrame-debugging call-site capture is off
+      (``spark.python.sql.dataFrameDebugging.enabled=false``): it makes
+      every Column or function call walk the Python stack and send
+      extra py4j commands, a large share of plan-construction time.
+      Analysis errors then no longer name the Python call site.
+      PySpark reads the value once per process, at the first DataFrame
+      call under an active session, so turning it back on needs
+      ``extra_conf`` on the first session of a fresh process.
+    """
     cpus = default_parallelism()
     if master is None:
         master = f"local[{cpus}]"
@@ -394,6 +419,14 @@ def get_session(app_name: str = "location-summary-etl-spark",
         # timings.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # PySpark's DataFrame-debugging wrapper (``_with_origin``) walks
+        # the Python stack and sends 9 extra py4j commands (active
+        # session, conf read, origin set/clear) on EVERY Column or
+        # function call: F.col("x") + 1 sends 24 commands instead of 4.
+        # Off, the etl_summary builders went from 923 to 726 ms and
+        # 4,546 to 1,766 py4j commands per pass (OPTIMIZATION_r14.md,
+        # "Plan construction: call-site capture off").
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

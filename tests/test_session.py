@@ -8,10 +8,14 @@ relations.
 
 from __future__ import annotations
 
+import os
+
+from py4j.protocol import MEMORY_COMMAND_NAME
 from pyspark.sql import functions as F
 
 from location_summary_etl_spark.session import (
     broadcast_if_small,
+    default_parallelism,
     ensure_parallelism,
     partition_for_python_scan,
     source_bytes,
@@ -104,3 +108,42 @@ def test_demote_guarded_window_warnings_scopes_to_windowexec(spark):
     # Sibling execution loggers are untouched: WARN stays enabled.
     sibling = lm.getLogger("org.apache.spark.sql.execution.SparkPlan")
     assert sibling.isWarnEnabled()
+
+
+def test_default_parallelism_follows_the_host(monkeypatch):
+    # no session: pure environment/host lookup
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    if hasattr(os, "sched_getaffinity"):
+        assert default_parallelism() == len(os.sched_getaffinity(0))
+        monkeypatch.delattr(os, "sched_getaffinity")
+    monkeypatch.setattr(os, "cpu_count", lambda: 7)
+    assert default_parallelism() == 7
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_parallelism() == 3
+
+
+def test_column_building_sends_few_py4j_commands(spark):
+    """Call-site capture (PySpark's DataFrame debugging) adds ~9 py4j
+    commands to every Column or function call: ``F.col("x") + 1``
+    sends ~24 commands with it and 4 without."""
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    # the first Column call of a process reads the setting once
+    F.col("x")
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counted(command, *args, **kwargs):
+        # memory-release commands come from the finalizer thread at
+        # unpredictable times
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        F.col("x") + 1
+    finally:
+        client.send_command = send
+    assert len(sent) <= 6, sent
